@@ -11,6 +11,8 @@ encode/decode + document-boundary scanning.
 Reference parity:
 - ``decode_file_iter`` ↔ BSONFileRecordReader's sequential decode loop
   (core/.../input/BSONFileRecordReader.java:71-225).
+- ``decode(data, fields)`` ↔ MongoRecordReader handing back only the
+  projected fields: unread top-level elements are skipped by length.
 - ``find_split_points`` ↔ BSONSplitter's length-header walk that cuts
   splits at document boundaries near a target size
   (core/.../splitter/BSONSplitter.java:222-280); like the reference it
@@ -162,50 +164,73 @@ def encode(doc: dict) -> bytes:
 # Decoding
 # ---------------------------------------------------------------------------
 
+_I32 = struct.Struct("<i").unpack_from
+_I64 = struct.Struct("<q").unpack_from
+_F64 = struct.Struct("<d").unpack_from
+_TS = struct.Struct("<II").unpack_from
+_TIMEDELTA = _dt.timedelta
+
+# value widths for skipping an unread element: fixed-size tags...
+_FIXED_WIDTH = {0x01: 8, 0x06: 0, 0x07: 12, 0x08: 1, 0x09: 8, 0x0A: 0,
+                0x10: 4, 0x11: 8, 0x12: 8, 0x7F: 0, 0xFF: 0}
+# ...and length-prefixed ones: (bytes the declared length leaves out,
+# smallest valid declared length)
+_PREFIXED = {0x02: (4, 1), 0x0E: (4, 1), 0x03: (0, 5), 0x04: (0, 5),
+             0x05: (5, 0)}
+
+
 def _read_cstring(data: bytes, pos: int) -> tuple[str, int]:
     end = data.index(b"\x00", pos)
     return data[pos:end].decode("utf-8"), end + 1
 
 
+def _length(data: bytes, pos: int, smallest: int) -> int:
+    (ln,) = _I32(data, pos)
+    if ln < smallest:
+        raise ValueError(f"corrupt BSON length {ln} at offset {pos}")
+    return ln
+
+
 def _decode_value(tag: int, data: bytes, pos: int):
+    """Decode the value at ``pos``; embedded documents and arrays are read
+    in place from ``data`` (no copy of their bytes)."""
     if tag == 0x01:
-        return struct.unpack_from("<d", data, pos)[0], pos + 8
-    if tag == 0x02 or tag == 0x0E:  # string / symbol
-        (ln,) = struct.unpack_from("<i", data, pos)
-        s = data[pos + 4 : pos + 4 + ln - 1].decode("utf-8")
-        return s, pos + 4 + ln
+        return _F64(data, pos)[0], pos + 8
+    if tag == 0x10:
+        return _I32(data, pos)[0], pos + 4
+    if tag == 0x02 or tag == 0x0E:  # string / symbol; _length inlined
+        (ln,) = _I32(data, pos)
+        if ln < 1:
+            raise ValueError(f"corrupt BSON length {ln} at offset {pos}")
+        return data[pos + 4 : pos + 3 + ln].decode("utf-8"), pos + 4 + ln
+    if tag == 0x09:
+        return _EPOCH + _TIMEDELTA(0, 0, 0, _I64(data, pos)[0]), pos + 8
     if tag == 0x03:
-        (ln,) = struct.unpack_from("<i", data, pos)
-        return decode(data[pos : pos + ln]), pos + ln
+        ln = _length(data, pos, 5)
+        return _decode_elements(data, pos + 4, pos + ln - 1, None), pos + ln
     if tag == 0x04:
-        (ln,) = struct.unpack_from("<i", data, pos)
-        inner = decode(data[pos : pos + ln])
-        return [inner[k] for k in inner], pos + ln
-    if tag == 0x05:
-        (ln,) = struct.unpack_from("<i", data, pos)
-        subtype = data[pos + 4]
-        raw = data[pos + 5 : pos + 5 + ln]
-        return (raw if subtype == 0 else Binary(raw, subtype)), pos + 5 + ln
-    if tag == 0x06 or tag == 0x0A:  # undefined / null
-        return None, pos
+        ln = _length(data, pos, 5)
+        return _decode_array(data, pos + 4, pos + ln - 1), pos + ln
+    if tag == 0x12:
+        return _I64(data, pos)[0], pos + 8
     if tag == 0x07:
         return ObjectId(data[pos : pos + 12]), pos + 12
     if tag == 0x08:
         return data[pos] == 1, pos + 1
-    if tag == 0x09:
-        (millis,) = struct.unpack_from("<q", data, pos)
-        return _EPOCH + _dt.timedelta(milliseconds=millis), pos + 8
+    if tag == 0x06 or tag == 0x0A:  # undefined / null
+        return None, pos
+    if tag == 0x05:
+        ln = _length(data, pos, 0)
+        subtype = data[pos + 4]
+        raw = data[pos + 5 : pos + 5 + ln]
+        return (raw if subtype == 0 else Binary(raw, subtype)), pos + 5 + ln
     if tag == 0x0B:
         pattern, pos = _read_cstring(data, pos)
         flags, pos = _read_cstring(data, pos)
         return Regex(pattern, flags), pos
-    if tag == 0x10:
-        return struct.unpack_from("<i", data, pos)[0], pos + 4
     if tag == 0x11:
-        inc, time = struct.unpack_from("<II", data, pos)
+        inc, time = _TS(data, pos)
         return BsonTimestamp(time, inc), pos + 8
-    if tag == 0x12:
-        return struct.unpack_from("<q", data, pos)[0], pos + 8
     if tag == 0xFF:
         return MinKey(), pos
     if tag == 0x7F:
@@ -213,25 +238,96 @@ def _decode_value(tag: int, data: bytes, pos: int):
     raise ValueError(f"unsupported BSON tag 0x{tag:02x}")
 
 
-def decode(data: bytes) -> dict:
-    (total,) = struct.unpack_from("<i", data, 0)
-    if total != len(data):
-        data = data[:total]
-    pos, out = 4, {}
-    while True:
+def _skip_value(tag: int, data: bytes, pos: int, end: int) -> int:
+    """Offset just past the value at ``pos``, found from its tag's fixed
+    width or its length prefix without decoding it.  A value that would
+    run past ``end`` (its document's terminating NUL) is corrupt input."""
+    width = _FIXED_WIDTH.get(tag)
+    if width is not None:
+        nxt = pos + width
+    elif tag in _PREFIXED:
+        if pos + 4 > end:
+            raise ValueError(f"BSON element overruns its document at {pos}")
+        before, smallest = _PREFIXED[tag]
+        nxt = pos + before + _length(data, pos, smallest)
+    elif tag == 0x0B:  # regex: pattern and flags cstrings
+        nxt = data.index(b"\x00", data.index(b"\x00", pos, end) + 1, end) + 1
+    else:
+        raise ValueError(f"unsupported BSON tag 0x{tag:02x}")
+    if nxt > end:
+        raise ValueError(f"BSON element overruns its document at {pos}")
+    return nxt
+
+
+def _bad_end(pos: int, end: int):
+    raise ValueError(f"BSON elements do not end at their document's "
+                     f"terminator (offset {pos}, expected {end})")
+
+
+def _decode_elements(data: bytes, pos: int, end: int, fields) -> dict:
+    """Elements from ``pos`` up to the terminating NUL at ``end``; with
+    ``fields`` (a set of UTF-8 key bytes) only matching keys are decoded
+    and every other element is skipped."""
+    out = {}
+    while pos < end:
         tag = data[pos]
-        if tag == 0:
-            break
-        pos += 1
-        name, pos = _read_cstring(data, pos)
-        out[name], pos = _decode_value(tag, data, pos)
+        kend = data.index(b"\x00", pos + 1, end)
+        key = data[pos + 1 : kend]
+        if fields is None or key in fields:
+            value, pos = _decode_value(tag, data, kend + 1)
+            out[key.decode("utf-8")] = value
+        else:
+            pos = _skip_value(tag, data, kend + 1, end)
+    if pos != end or data[end]:
+        _bad_end(pos, end)
     return out
 
 
-def decode_file_iter(fobj: io.BufferedIOBase, start: int = 0, length: int | None = None):
+def _decode_array(data: bytes, pos: int, end: int) -> list:
+    """Array elements in order; their "0", "1", ... keys are skipped."""
+    out = []
+    append = out.append
+    while pos < end:
+        tag = data[pos]
+        value, pos = _decode_value(tag, data, data.index(b"\x00", pos + 1, end) + 1)
+        append(value)
+    if pos != end or data[end]:
+        _bad_end(pos, end)
+    return out
+
+
+def _key_set(fields) -> frozenset | None:
+    return None if fields is None else frozenset(f.encode("utf-8") for f in fields)
+
+
+def _decode_doc(data: bytes, keys) -> dict:
+    (total,) = _I32(data, 0)
+    if total < 5 or total > len(data):
+        raise ValueError(f"corrupt BSON document length {total}")
+    return _decode_elements(data, 4, total - 1, keys)
+
+
+def decode(data: bytes, fields=None) -> dict:
+    """Decode one BSON document.
+
+    ``fields`` (top-level names) decodes only those keys: every other
+    top-level element is skipped by its length prefix or fixed width, the
+    way a server-side projection returns only projected fields.  Skipped
+    elements are still checked to stay inside their document, and an
+    unknown tag raises whether or not its field is wanted; the bytes of an
+    unread string are not UTF-8-decoded, so invalid text there goes
+    unnoticed, as it would under a server-side projection.
+    """
+    return _decode_doc(data, _key_set(fields))
+
+
+def decode_file_iter(fobj: io.BufferedIOBase, start: int = 0,
+                     length: int | None = None, fields=None):
     """Stream documents from a .bson file, optionally within a byte range
     (a split): reads from ``start`` until ``start+length`` (doc boundaries
-    guaranteed by the splitter) or EOF."""
+    guaranteed by the splitter) or EOF.  ``fields`` narrows each document
+    to those top-level names, as in :func:`decode`."""
+    keys = _key_set(fields)
     fobj.seek(start)
     limit = None if length is None else start + length
     while True:
@@ -244,7 +340,7 @@ def decode_file_iter(fobj: io.BufferedIOBase, start: int = 0, length: int | None
         body = fobj.read(ln - 4)
         if len(body) < ln - 4:
             raise ValueError("truncated BSON document")
-        yield decode(header + body)
+        yield _decode_doc(header + body, keys)
 
 
 # ---------------------------------------------------------------------------

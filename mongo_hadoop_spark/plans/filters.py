@@ -260,6 +260,31 @@ def match(doc: dict, query: dict | None) -> bool:
     return True
 
 
+def query_roots(query: dict | None) -> set[str] | None:
+    """Top-level document fields :func:`match` reads for ``query``: the
+    first segment of every field path, through ``$and``/``$or``/``$nor``.
+    None when the query holds any other top-level operator — ``match``
+    raises on those, and a narrowed decode must not change that."""
+    roots: set[str] = set()
+    pending = [query or {}]
+    while pending:
+        q = pending.pop()
+        if not isinstance(q, dict):
+            return None
+        for key, cond in q.items():
+            if key in ("$and", "$or", "$nor"):
+                if not isinstance(cond, (list, tuple)):
+                    return None
+                pending.extend(cond)
+            elif key == "$comment":
+                continue
+            elif key.startswith("$"):
+                return None
+            else:
+                roots.add(key.split(".", 1)[0])
+    return roots
+
+
 def _path_present(doc, path: str) -> bool:
     cur = doc
     for seg in path.split("."):

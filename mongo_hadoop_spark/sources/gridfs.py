@@ -5,8 +5,9 @@ regex-delimited text tokens or whole binary chunks, one split per chunk
 (core/.../GridFSInputFormat.java:40-343; GridFSSplit.java:18-111).
 
 Spark-native shape: the chunks collection *is* the partitionable dataset —
-read `fs.chunks` through the mongodoc source (one byte-range partition per
-segment), join broadcast file metadata, then:
+read `fs.chunks` through the mongodoc source (byte-range splits of its
+segments, small ones packed into partitions of up to ``split_size``), join
+broadcast file metadata, then:
 - whole-chunk rows for binary processing, or
 - per-file text reassembly + `split()`/`explode()` for token streams
   (default delimiter ``(\\n|\\r\\n)`` like the reference).

@@ -17,8 +17,17 @@ Read path:
   static query; untranslatable filters stay residual and Spark re-applies
   them above the scan — the reference's superset contract.
 - **Partition planning** (§2.2): byte-range splits at BSON doc boundaries
-  by default (P10); sample/paginating range splitters (P3/P7) emit
-  per-partition ``{key: {$gte,$lt}}`` queries (P8).
+  by default (P10), consecutive ones packed into one partition up to
+  ``split_size`` bytes (a Python task has a fixed cost, so a collection
+  smaller than ``split_size`` is one task; lower ``split_size`` for more
+  parallelism); compressed segments stay one partition each.
+  Sample/paginating range splitters (P3/P7) emit per-partition
+  ``{key: {$gte,$lt}}`` queries (P8).
+- **Narrow decode**: a split decodes only the top-level fields its rows
+  (the schema's columns), its query and its sort read; the other
+  elements are skipped by length, like a server-side projection.  Python
+  DataSources get no column pruning from Spark, so ``fields`` or a narrow
+  ``.schema(...)`` is what narrows the scan.
 - **Schema** (M4): user-supplied via ``.schema(...)`` or inferred from a
   document sample with type widening.
 
@@ -43,7 +52,9 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
-from mongo_hadoop_spark.plans.filters import and_queries, match, translate_filters
+from mongo_hadoop_spark.plans.filters import (
+    and_queries, match, query_roots, translate_filters,
+)
 from mongo_hadoop_spark.plans.splitters import (
     DEFAULT_MIN_DOCS, DEFAULT_SPLIT_SIZE, SplitSpec, bson_file_splitter,
     multi_collection_splits, paginating_splitter, sample_splitter,
@@ -55,7 +66,16 @@ from mongo_hadoop_spark.sources.schema_infer import doc_to_row, infer_schema
 
 @dataclass
 class _DocPartition(InputPartition):
-    spec: SplitSpec
+    """One Spark task: a single split, or a run of consecutive byte-range
+    splits packed up to ``split_size`` (each still read with its own query
+    and cursor options)."""
+    specs: tuple[SplitSpec, ...]
+
+    @property
+    def spec(self) -> SplitSpec:
+        """The split of an unpacked partition."""
+        (only,) = self.specs
+        return only
 
 
 class DocumentDataSource(DataSource):
@@ -222,10 +242,10 @@ class DocumentReader(DataSourceReader):
 
         cur = self._cursor_options()
         return [
-            _DocPartition(dataclasses.replace(
+            _DocPartition((dataclasses.replace(
                 s, projection=cur["projection"], sort=cur["sort"],
                 limit=cur["limit"], skip=cur["skip"],
-            ))
+            ),))
             for s in splits
         ]
 
@@ -281,27 +301,35 @@ class DocumentReader(DataSourceReader):
                 if not splits and not path_filter:
                     splits = single_splitter(name, query)
             all_splits.append(splits)
-        return self._with_cursor_options(multi_collection_splits(all_splits))
+        return _pack_byte_ranges(
+            self._with_cursor_options(multi_collection_splits(all_splits)),
+            split_size)
 
     # --- per-partition scan (MongoRecordReader analog) --------------------
 
     def read(self, partition: _DocPartition):
+        if partition is None:  # planner produced zero partitions
+            return
+        convert = self._converter()
+        row_fields = self._row_fields()
+        for spec in partition.specs:
+            yield from self._read_split(spec, convert, row_fields)
+
+    def _read_split(self, spec: SplitSpec, convert, row_fields):
         from mongo_hadoop_spark import bsonio
         from mongo_hadoop_spark.store import DocumentStore
 
         from mongo_hadoop_spark.plans.filters import project as mongo_project
 
-        if partition is None:  # planner produced zero partitions
-            return
-        spec = partition.spec
-        convert = self._converter()
         plain = not (spec.sort or spec.limit is not None or spec.skip)
+        fields = _decode_fields(spec, row_fields)
 
         if spec.segment_path is not None and plain:
             # streaming fast path: no cursor options → decode-filter-emit
             with bsonio.open_bson(spec.segment_path) as f:
                 for doc in bsonio.decode_file_iter(
-                    f, start=spec.byte_start, length=spec.byte_length
+                    f, start=spec.byte_start, length=spec.byte_length,
+                    fields=fields,
                 ):
                     if match(doc, spec.query):
                         if spec.projection:
@@ -313,7 +341,8 @@ class DocumentReader(DataSourceReader):
             with bsonio.open_bson(spec.segment_path) as f:
                 docs = [
                     d for d in bsonio.decode_file_iter(
-                        f, start=spec.byte_start, length=spec.byte_length)
+                        f, start=spec.byte_start, length=spec.byte_length,
+                        fields=fields)
                     if match(d, spec.query)
                 ]
             docs = _apply_cursor_options(docs, spec)
@@ -353,6 +382,18 @@ class DocumentReader(DataSourceReader):
 
             return convert
         return lambda doc: doc_to_row(doc, schema)
+
+    def _row_fields(self) -> set[str] | None:
+        """Top-level document fields the converter reads (None: all)."""
+        import json
+
+        if str(self.options.get("schemaless", "false")).lower() == "true":
+            return None
+        mapping = json.loads(self.options.get("columns_mapping") or "{}")
+        if mapping:
+            return {mapping.get(f.name, f.name).split(".", 1)[0]
+                    for f in self.schema_.fields}
+        return {f.name for f in self.schema_.fields}
 
 
 class LiveDocumentReader(DocumentReader):
@@ -696,6 +737,42 @@ class LiveDocumentWriter(DataSourceWriter):
 
     def abort(self, messages) -> None:
         pass  # at-least-once: no server-side undo exists
+
+
+def _decode_fields(spec: SplitSpec, row_fields: set[str] | None) -> set[str] | None:
+    """Top-level fields a split must decode: those its rows read, the
+    roots of its query paths and of its sort keys.  Projection needs no
+    entry of its own: it passes each field it keeps (or trims, with
+    $slice/$elemMatch) on under the same top-level name, so any field the
+    converter can see is already a row field.  None decodes all."""
+    query_fields = query_roots(spec.query)
+    if row_fields is None or query_fields is None:
+        return None
+    sort_fields = {key.split(".", 1)[0] for key, _ in spec.sort or ()}
+    return row_fields | query_fields | sort_fields
+
+
+def _pack_byte_ranges(parts: list[_DocPartition],
+                      split_size: int) -> list[_DocPartition]:
+    """Pack runs of consecutive byte-range splits into one partition each,
+    until the next split would take it past ``split_size`` bytes — every
+    Python task has a fixed cost, so small segments should share one, as
+    Spark's file sources pack small files.  Compressed (whole-file) and
+    query-range splits stay one per partition."""
+    packed: list[_DocPartition] = []
+    room = 0  # bytes the last packed partition can still take
+    for part in parts:
+        length = part.spec.byte_length
+        if part.spec.segment_path is None or length is None:
+            packed.append(part)
+            room = 0
+        elif length <= room:
+            packed[-1] = _DocPartition(packed[-1].specs + part.specs)
+            room -= length
+        else:
+            packed.append(part)
+            room = split_size - length
+    return packed
 
 
 def _apply_cursor_options(docs: list, spec) -> list:
