@@ -30,6 +30,15 @@ Read path:
   ``.schema(...)`` is what narrows the scan.
 - **Schema** (M4): user-supplied via ``.schema(...)`` or inferred from a
   document sample with type widening.
+- **Arrow batches**: the readers Spark gets hand it ``pyarrow.RecordBatch``es
+  of up to 10,000 rows (``BATCH_ROWS``, Spark's default
+  ``maxRecordsPerBatch``), so pyspark takes them as they are instead of
+  converting row tuples a second time.  Each batch is built column-wise
+  by a converter compiled once per schema
+  (``schema_infer.compile_column``): per column, values of the expected
+  type pass an inline type test and the rest take ``convert_value``'s
+  rules.  A reader constructed directly still yields one tuple per row,
+  from the same columns.
 
 Write path:
     df.write.format("mongodoc").option("path", store_dir)
@@ -61,7 +70,11 @@ from mongo_hadoop_spark.plans.splitters import (
     single_splitter,
 )
 from mongo_hadoop_spark.sources import extjson
-from mongo_hadoop_spark.sources.schema_infer import doc_to_row, infer_schema
+from mongo_hadoop_spark.sources.schema_infer import compile_column, infer_schema
+
+# rows per Arrow batch handed to Spark: the default of Spark's
+# spark.sql.execution.arrow.maxRecordsPerBatch
+BATCH_ROWS = 10_000
 
 
 @dataclass
@@ -92,10 +105,7 @@ class DocumentDataSource(DataSource):
         return DocumentStore(path)
 
     def _collections(self) -> list[str]:
-        coll = self.options.get("collection")
-        if not coll:
-            raise ValueError("option 'collection' is required")
-        return [c.strip() for c in coll.split(",") if c.strip()]
+        return _collection_names(self.options)
 
     def schema(self) -> StructType:
         # schemaless mode (SURVEY §1.3 mode 1 — Pig MongoLoader() with no
@@ -168,17 +178,17 @@ class DocumentDataSource(DataSource):
         pushdown = str(self.options.get("pushdown", "false")).lower() == "true"
         if self.options.get("backend") == "live":
             return (LivePushdownDocumentReader if pushdown
-                    else LiveDocumentReader)(self.options, schema)
+                    else LiveDocumentReader)(self.options, schema, arrow=True)
         if pushdown:
-            return PushdownDocumentReader(self.options, schema)
-        return DocumentReader(self.options, schema)
+            return PushdownDocumentReader(self.options, schema, arrow=True)
+        return DocumentReader(self.options, schema, arrow=True)
 
     def streamReader(self, schema: StructType):  # noqa: N802 (Spark API)
         if self.options.get("backend") == "live":
             raise ValueError(
                 "streaming tail reads the file-backed store; the live "
                 "backend has no change-stream surface here")
-        return DocumentStreamReader(self.options, schema)
+        return DocumentStreamReader(self.options, schema, arrow=True)
 
     def writer(self, schema: StructType, overwrite: bool):
         if self.options.get("backend") == "live":
@@ -205,11 +215,16 @@ class DocumentReader(DataSourceReader):
     against Spark 4.1: ``df.where(...).count(); df.count()`` under-counts).
     With pushdown on, create a fresh ``load()`` per query — the normal
     connector pattern; tests/test_datasource.py covers both behaviors.
+
+    ``arrow`` (set by :meth:`DocumentDataSource.reader`) makes ``read``
+    yield Arrow batches for Spark; constructed directly, a reader yields
+    one tuple per row.
     """
 
-    def __init__(self, options, schema: StructType):
+    def __init__(self, options, schema: StructType, *, arrow: bool = False):
         self.options = options
         self.schema_ = schema
+        self.arrow = arrow
         self.static_query = extjson.parse_query(options.get("query"))
         self.pushed_query: dict = {}
 
@@ -253,7 +268,7 @@ class DocumentReader(DataSourceReader):
         from mongo_hadoop_spark.store import DocumentStore
 
         store = DocumentStore(self.options["path"])
-        colls = [c.strip() for c in self.options["collection"].split(",")]
+        colls = _collection_names(self.options)
         strategy = self.options.get("splitter", "bson_file")
         key = self.options.get("key", "_id")
         split_size = int(self.options.get("split_size", DEFAULT_SPLIT_SIZE))
@@ -308,14 +323,37 @@ class DocumentReader(DataSourceReader):
     # --- per-partition scan (MongoRecordReader analog) --------------------
 
     def read(self, partition: _DocPartition):
+        """One partition's rows: ``pyarrow.RecordBatch``es of up to
+        ``BATCH_ROWS`` rows when Spark reads (``arrow``), else one tuple
+        per row, holding the batches' values (struct values as dicts,
+        timestamps UTC-aware)."""
         if partition is None:  # planner produced zero partitions
             return
-        convert = self._converter()
+        columns = self._columns()
+        chunks = _chunks(self._docs(partition), BATCH_ROWS)
+        if not self.arrow:
+            for docs in chunks:
+                cols = columns(docs)
+                yield from zip(*cols) if cols else (() for _ in docs)
+            return
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        schema = to_arrow_schema(self.schema_)
+        for docs in chunks:
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(col, type=f.type)
+                 for col, f in zip(columns(docs), schema)],
+                schema=schema)
+
+    def _docs(self, partition: _DocPartition):
+        """The partition's documents, each split in turn: decode → match →
+        cursor options (sort/skip/limit/projection)."""
         row_fields = self._row_fields()
         for spec in partition.specs:
-            yield from self._read_split(spec, convert, row_fields)
+            yield from self._split_docs(spec, row_fields)
 
-    def _read_split(self, spec: SplitSpec, convert, row_fields):
+    def _split_docs(self, spec: SplitSpec, row_fields):
         from mongo_hadoop_spark import bsonio
         from mongo_hadoop_spark.store import DocumentStore
 
@@ -334,7 +372,7 @@ class DocumentReader(DataSourceReader):
                     if match(doc, spec.query):
                         if spec.projection:
                             doc = mongo_project(doc, spec.projection)
-                        yield convert(doc)
+                        yield doc
             return
 
         if spec.segment_path is not None:
@@ -345,49 +383,49 @@ class DocumentReader(DataSourceReader):
                         fields=fields)
                     if match(d, spec.query)
                 ]
-            docs = _apply_cursor_options(docs, spec)
-            for doc in docs:
-                yield convert(doc)
+            yield from _apply_cursor_options(docs, spec)
         else:
             store = DocumentStore(self.options["path"])
             coll = store.collection(spec.collection)
-            for doc in coll.find(spec.query, projection=spec.projection,
+            yield from coll.find(spec.query, projection=spec.projection,
                                  sort=spec.sort, skip=spec.skip,
-                                 limit=spec.limit):
-                yield convert(doc)
+                                 limit=spec.limit)
 
-    def _converter(self):
-        """doc → row tuple, honoring schemaless mode and columns mapping."""
+    def _schemaless(self) -> bool:
+        return str(self.options.get("schemaless", "false")).lower() == "true"
+
+    def _columns(self):
+        """Compile the schema once into ``columns(docs) -> [column, ...]``.
+        A column's values come from its source: the field of that name, its
+        ``columns_mapping`` entry (a dotted path resolves through
+        ``get_path``), or, schemaless, the whole document as extended JSON."""
         import json
 
         from mongo_hadoop_spark.plans.paths import get_path
-        from mongo_hadoop_spark.sources.schema_infer import convert_value
 
-        schema = self.schema_
-        if str(self.options.get("schemaless", "false")).lower() == "true":
-            return lambda doc: (extjson.dumps(doc),)
-        raw = self.options.get("columns_mapping")
-        if raw:
-            mapping = json.loads(raw)
-            fields = [(f, mapping.get(f.name, f.name)) for f in schema.fields]
+        def pull(src):
+            if src is None:
+                return lambda docs: [extjson.dumps(d) for d in docs]
+            if "." in src:
+                return lambda docs: [get_path(d, src) for d in docs]
+            return lambda docs: [d.get(src) for d in docs]
 
-            def convert(doc):
-                return tuple(
-                    convert_value(
-                        get_path(doc, src) if "." in src else doc.get(src),
-                        f.dataType,
-                    )
-                    for f, src in fields
-                )
-
-            return convert
-        return lambda doc: doc_to_row(doc, schema)
+        fields = self.schema_.fields
+        if self._schemaless():
+            sources = [None]
+        else:
+            mapping = json.loads(self.options.get("columns_mapping") or "{}")
+            sources = [mapping.get(f.name, f.name) for f in fields]
+        plan = [(pull(src),
+                 compile_column(f.dataType, f.nullable))
+                for f, src in zip(fields, sources)]
+        return lambda docs: [build(values(docs)) for values, build in plan]
 
     def _row_fields(self) -> set[str] | None:
         """Top-level document fields the converter reads (None: all)."""
         import json
 
-        if str(self.options.get("schemaless", "false")).lower() == "true":
+        if self._schemaless():
             return None
         mapping = json.loads(self.options.get("columns_mapping") or "{}")
         if mapping:
@@ -511,14 +549,10 @@ class LiveDocumentReader(DocumentReader):
                                     shard_locations=shard_hosts,
                                     query=query)
 
-    def read(self, partition: _DocPartition):
+    def _docs(self, partition: _DocPartition):
         from mongo_hadoop_spark.sources.live_read import split_cursor
 
-        if partition is None:
-            return
-        convert = self._converter()
-        for doc in split_cursor(self._target(), partition.spec):
-            yield convert(doc)
+        return split_cursor(self._target(), partition.spec)
 
 
 class PushdownDocumentReader(DocumentReader):
@@ -563,11 +597,10 @@ class DocumentStreamReader(DataSourceStreamReader):
     ``option("startingOffsets", "latest")`` skips existing segments.
     """
 
-    def __init__(self, options, schema: StructType):
-        self._delegate = DocumentReader(options, schema)
+    def __init__(self, options, schema: StructType, *, arrow: bool = False):
+        self._delegate = DocumentReader(options, schema, arrow=arrow)
         self.options = options
-        colls = [c.strip() for c in options["collection"].split(",")
-                 if c.strip()]
+        colls = _collection_names(options)
         if len(colls) != 1:
             raise ValueError("streaming tail supports exactly one collection")
         self.collection = colls[0]
@@ -632,6 +665,7 @@ class DocumentWriter(DataSourceWriter):
 
     def write(self, rows) -> _SegmentCommit:
         from mongo_hadoop_spark import bsonio
+        from mongo_hadoop_spark.sinks.writers import row_to_doc
 
         os.makedirs(self.coll_dir, exist_ok=True)
         # optional codec (gzip/bz2): compressed segments are unsplittable
@@ -643,13 +677,11 @@ class DocumentWriter(DataSourceWriter):
         name = uuid.uuid4().hex[:12]
         tmp = os.path.join(self.coll_dir, f"_tmp_{name}.bson{ext}.inprogress")
         final = os.path.join(self.coll_dir, f"{name}.bson{ext}")
-        fields = [f.name for f in self.schema_.fields]
         n = 0
         opener = bsonio._CODEC_OPENERS.get(ext, open)
         with opener(tmp, "wb") as f:
             for row in rows:
-                doc = _row_to_doc(row, fields)
-                f.write(bsonio.encode(doc))
+                f.write(bsonio.encode(row_to_doc(row)))
                 n += 1
         return _SegmentCommit(tmp, final, n)
 
@@ -712,15 +744,15 @@ class LiveDocumentWriter(DataSourceWriter):
         self.batch_size = int(options.get("batch_size", 1000))
 
     def write(self, rows) -> _LiveCommit:
+        from mongo_hadoop_spark.sinks.writers import row_to_doc
         from mongo_hadoop_spark.sources.live_read import collection_from_uri
 
         coll = collection_from_uri(self.options["uri"],
                                    self.options.get("client_factory"))
-        fields = [f.name for f in self.schema_.fields]
         batch: list = []
         n = batches = 0
         for row in rows:
-            batch.append(_row_to_doc(row, fields))
+            batch.append(row_to_doc(row))
             if len(batch) >= self.batch_size:
                 coll.insert_many(batch, ordered=True)
                 n += len(batch)
@@ -737,6 +769,23 @@ class LiveDocumentWriter(DataSourceWriter):
 
     def abort(self, messages) -> None:
         pass  # at-least-once: no server-side undo exists
+
+
+def _collection_names(options) -> list[str]:
+    """The ``collection`` option: comma-separated names, blanks dropped."""
+    names = options.get("collection")
+    if not names:
+        raise ValueError("option 'collection' is required")
+    return [c.strip() for c in names.split(",") if c.strip()]
+
+
+def _chunks(items, n: int):
+    """Lists of up to ``n`` consecutive items."""
+    import itertools
+
+    it = iter(items)
+    while chunk := list(itertools.islice(it, n)):
+        yield chunk
 
 
 def _decode_fields(spec: SplitSpec, row_fields: set[str] | None) -> set[str] | None:
@@ -798,24 +847,3 @@ def _apply_cursor_options(docs: list, spec) -> list:
         docs = [project(d, spec.projection) for d in docs]
     return docs
 
-
-def _row_to_doc(row, fields) -> dict:
-    out = {}
-    for name in fields:
-        v = row[name] if not hasattr(row, "asDict") else row.asDict(recursive=True).get(name)
-        out[name] = _to_bson_value(v)
-    return out
-
-
-def _to_bson_value(v):
-    import datetime as _dt
-
-    if hasattr(v, "asDict"):
-        return {k: _to_bson_value(x) for k, x in v.asDict().items()}
-    if isinstance(v, dict):
-        return {k: _to_bson_value(x) for k, x in v.items()}
-    if isinstance(v, (list, tuple)):
-        return [_to_bson_value(x) for x in v]
-    if isinstance(v, _dt.date) and not isinstance(v, _dt.datetime):
-        return _dt.datetime(v.year, v.month, v.day, tzinfo=_dt.timezone.utc)
-    return v

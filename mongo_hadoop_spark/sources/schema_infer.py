@@ -16,6 +16,7 @@ TimestampType, Regex→StringType, embedded doc→StructType, array→ArrayType.
 from __future__ import annotations
 
 import datetime as _dt
+import functools
 
 from pyspark.sql.types import (
     ArrayType, BinaryType, BooleanType, DataType, DoubleType, LongType,
@@ -161,3 +162,88 @@ def convert_value(v, t: DataType):
 
 def doc_to_row(doc: dict, schema: StructType) -> tuple:
     return tuple(convert_value(doc.get(f.name), f.dataType) for f in schema.fields)
+
+
+# ---------------------------------------------------------------------------
+# Schema-compiled converters (the scan's type bridge)
+# ---------------------------------------------------------------------------
+#
+# ``convert_value`` dispatches on the target type for every value.  A scan
+# converts millions of values against one schema, so the dispatch is done
+# once: each DataType compiles into a closure, and a value of the exact
+# type its column expects (the common case) passes an inline
+# ``type(v) is T`` test with no call; anything else falls to
+# ``convert_value``, so every leaf equals its result.  Two differences,
+# both the shape Spark's own Python→Arrow conversion gives: struct values
+# become dicts, and timestamps are UTC-aware (a naive datetime is read as
+# local time, ``value.astimezone(utc)``, exactly as pyspark reads one).  A
+# None in a non-nullable field, array element or nested field raises, as
+# pyspark's converter does (Arrow itself accepts nulls there).
+
+# the value type that needs no conversion, per bridged Spark type; other
+# types map to None, which ``type(v)`` never is
+_EXACT = {StringType: str, LongType: int, DoubleType: float,
+          BooleanType: bool, BinaryType: bytes}
+
+
+def _not_none(conv, t: DataType):
+    from pyspark.errors import PySparkValueError
+
+    def checked(v):
+        out = conv(v)
+        if out is None:
+            raise PySparkValueError(f"input for {t} must not be None")
+        return out
+
+    return checked
+
+
+def _timestamp(v):
+    if type(v) is not _dt.datetime:
+        v = convert_value(v, TimestampType())
+        if v is None:
+            return None
+    return v if v.tzinfo is _UTC else v.astimezone(_UTC)
+
+
+def compile_value(t: DataType, nullable: bool = True):
+    """Compile ``t`` into ``conv(bson_value) -> value`` for one value.
+    Types outside the BSON bridge (int, date, decimal, map, ...), which
+    ``convert_value`` passes through, take pyspark's own converter, which
+    shapes them for Arrow."""
+    if type(t) in _EXACT:
+        conv = functools.partial(convert_value, t=t)
+    elif isinstance(t, TimestampType):
+        conv = _timestamp
+    elif isinstance(t, StructType):
+        fields = [(f.name, _EXACT.get(type(f.dataType)),
+                   compile_value(f.dataType, f.nullable))
+                  for f in t.fields]
+
+        def conv(v):
+            if not isinstance(v, dict):
+                return None
+            return {name: x if type(x := v.get(name)) is exact else c(x)
+                    for name, exact, c in fields}
+    elif isinstance(t, ArrayType):
+        build = compile_column(t.elementType, t.containsNull)
+
+        def conv(v):
+            return build(v) if isinstance(v, (list, tuple)) else None
+    else:
+        from pyspark.sql.conversion import LocalDataToArrowConversion
+
+        return LocalDataToArrowConversion._create_converter(t, nullable)
+    return conv if nullable else _not_none(conv, t)
+
+
+def compile_column(t: DataType, nullable: bool = True):
+    """Compile ``t`` into ``build(values) -> list``: a whole column (or
+    one array's elements) converted in one comprehension."""
+    conv = compile_value(t, nullable)
+    exact = _EXACT.get(type(t))
+
+    def build(values):
+        return [v if type(v) is exact else conv(v) for v in values]
+
+    return build

@@ -270,3 +270,51 @@ def test_target_from_uri_resolves_namespace(spark, tmp_path):
 
     with pytest.raises(InvalidMongoURI, match="namespace"):
         target_from_uri("mongodb://h1:27017/outdb", client_factory=FakeClient)
+
+
+_SINK: dict = {}
+
+
+def _sink_client(uri):
+    """client_factory for the live mongodoc writer: one fake collection."""
+    return {"outdb": {"c": _SINK["coll"]}}
+
+
+def test_mongodoc_writers_build_documents_with_row_to_doc(tmp_path):
+    """Both mongodoc DataSource writers turn each row into a document with
+    ``writers.row_to_doc``: nested rows, arrays of rows, maps and dates."""
+    import datetime as dt
+
+    from pyspark.sql import Row
+
+    from mongo_hadoop_spark import bsonio
+    from mongo_hadoop_spark.sinks.writers import row_to_doc
+    from mongo_hadoop_spark.sources.mongo_datasource import (
+        DocumentWriter, LiveDocumentWriter,
+    )
+
+    utc = dt.timezone.utc
+    rows = [Row(_id=i, day=dt.date(2024, 1, i + 1),
+                cust=Row(name=f"c{i}", tags=["a", "b"]),
+                lines=[Row(sku="s", qty=j) for j in range(i)], attrs={"k": i})
+            for i in range(3)]
+    want = [{"_id": i, "day": dt.datetime(2024, 1, i + 1, tzinfo=utc),
+             "cust": {"name": f"c{i}", "tags": ["a", "b"]},
+             "lines": [{"sku": "s", "qty": j} for j in range(i)],
+             "attrs": {"k": i}}
+            for i in range(3)]
+    assert [row_to_doc(r) for r in rows] == want
+
+    writer = DocumentWriter({"path": str(tmp_path), "collection": "c"},
+                            None, overwrite=False)
+    msg = writer.write(iter(rows))
+    writer.commit([msg])
+    with open(msg.final_path, "rb") as f:
+        assert list(bsonio.decode_file_iter(f)) == want
+
+    _SINK["coll"] = FakeCollection("c")
+    live = LiveDocumentWriter({"uri": "mongodb://localhost/outdb.c",
+                               "client_factory": "test_writers:_sink_client",
+                               "batch_size": "2"}, None)
+    assert live.write(iter(rows)).batches == 2
+    assert _SINK["coll"].docs == want
