@@ -4205,7 +4205,7 @@ def _stage_merge(df: DataFrame, spec, store_path: str | None,
         import tempfile
 
         from mongo_hadoop_spark.sinks.live import commit_updates_live
-        from mongo_hadoop_spark.sinks.writers import _UpdateJournalTask
+        from mongo_hadoop_spark.sinks.writers import journal_updates
 
         _uri, target = _live_parts(store_path, coll, client_factory)
         spool = spool_path or tempfile.mkdtemp(prefix="mongo_merge_spool_")
@@ -4215,10 +4215,9 @@ def _stage_merge(df: DataFrame, spec, store_path: str | None,
             df = df.persist()
         try:
             n_incoming = df.count() if when_not == "fail" else None
-            df.foreachPartition(_UpdateJournalTask(
-                spool, coll,
-                _merge_builder(when_matched, when_not == "insert", on_cols,
-                               let=spec.get("let"))))
+            journal_updates(df, spool, coll, _merge_builder(
+                when_matched, when_not == "insert", on_cols,
+                let=spec.get("let")))
             stats = commit_updates_live(spool, coll, target)
             if when_not == "fail" and stats["matched"] < n_incoming:
                 raise ValueError(

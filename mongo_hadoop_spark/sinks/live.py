@@ -77,17 +77,14 @@ def mutation_to_op(m: dict):
 
     The journal schema is the MongoUpdateWritable 5-tuple
     (core/.../io/MongoUpdateWritable.java:43-47) as written by
-    ``sinks.writers._UpdateJournalTask``:
+    ``sinks.writers.journal_updates``:
     ``{"q": query, "u": update, "upsert": bool, "multi": bool,
     "replace": bool}``.
     """
+    from mongo_hadoop_spark.sinks.writers import check_replacement
+
+    check_replacement(m["u"], m.get("replace"))
     if m.get("replace"):
-        if any(k.startswith("$") for k in m["u"]):
-            # server parity: replaceOne rejects update operators
-            raise ValueError(
-                "replace=True update document must not contain $-operators: "
-                f"{sorted(m['u'])}"
-            )
         return ReplaceOne(m["q"], m["u"], upsert=bool(m.get("upsert")))
     cls = UpdateMany if m.get("multi") else UpdateOne
     return cls(m["q"], m["u"], upsert=bool(m.get("upsert")),

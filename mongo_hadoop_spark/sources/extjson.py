@@ -3,7 +3,8 @@
 The reference parses all config-level query/projection/sort documents from
 JSON (com.mongodb.util.JSON.parse, MongoConfigUtil.java:674-702).  Here the
 same role: option strings → query dicts, honoring the common extended-JSON
-wrappers ($oid, $date, $regex, $binary, $numberLong, $minKey, $maxKey).
+wrappers ($oid, $date, $regex, $binary, $numberLong, $timestamp, $minKey,
+$maxKey).
 """
 
 from __future__ import annotations
@@ -12,7 +13,8 @@ import base64
 import datetime as _dt
 import json
 
-from mongo_hadoop_spark.bsonio import Binary, MaxKey, MinKey, ObjectId, Regex
+from mongo_hadoop_spark.bsonio import (Binary, BsonTimestamp, MaxKey, MinKey,
+                                      ObjectId, Regex)
 
 _UTC = _dt.timezone.utc
 
@@ -34,6 +36,9 @@ def _revive(obj):
             return Regex(obj["$regex"], obj.get("$options", ""))
         if "$numberLong" in obj:
             return int(obj["$numberLong"])
+        if "$timestamp" in obj and isinstance(obj["$timestamp"], dict):
+            return BsonTimestamp(int(obj["$timestamp"]["t"]),
+                                 int(obj["$timestamp"]["i"]))
         if "$minKey" in obj:
             return MinKey()
         if "$maxKey" in obj:
@@ -70,6 +75,8 @@ def to_extjson_value(v):
         return {"$binary": {"base64": base64.b64encode(v.data).decode(), "subType": f"{v.subtype:02x}"}}
     if isinstance(v, (bytes, bytearray)):
         return {"$binary": {"base64": base64.b64encode(v).decode(), "subType": "00"}}
+    if isinstance(v, BsonTimestamp):
+        return {"$timestamp": {"t": v.time, "i": v.inc}}
     if isinstance(v, MinKey):
         return {"$minKey": 1}
     if isinstance(v, MaxKey):

@@ -44,20 +44,19 @@ Write path:
     df.write.format("mongodoc").option("path", store_dir)
       .option("collection", name).mode("append").save()
 
-Each task spools rows to a temp ``.bson`` segment; global commit renames
-all segments into the collection (task retries/speculation leave only
-uncommitted temp files — the reference's idempotence story, W1/W2).
+Each task stages a temp segment; the job commit publishes them all
+(``DocumentCollection.publish``), so task retries/speculation leave only
+temp files — the reference's idempotence story, W1/W2.
 """
 
 from __future__ import annotations
 
 import os
-import uuid
 from dataclasses import dataclass
 
 from pyspark.sql.datasource import (
-    DataSource, DataSourceReader, DataSourceStreamReader, DataSourceWriter,
-    InputPartition, WriterCommitMessage,
+    DataSource, DataSourceArrowWriter, DataSourceReader,
+    DataSourceStreamReader, InputPartition, WriterCommitMessage,
 )
 from pyspark.sql.types import StructType
 
@@ -648,73 +647,62 @@ class DocumentStreamReader(DataSourceStreamReader):
 
 @dataclass
 class _SegmentCommit(WriterCommitMessage):
-    tmp_path: str
-    final_path: str
-    rows: int
+    segments: list  # store.StagedSegment
 
 
-class DocumentWriter(DataSourceWriter):
+class DocumentWriter(DataSourceArrowWriter):
     """Insert-mode writer with the reference's commit protocol (W1/W2):
-    task → temp segment; job commit → atomic renames; abort → delete."""
+    task → staged segment; job commit → publish (overwrite retires the
+    segments listed at commit); abort → discard.  ``transform`` maps each
+    document before it is written (``sinks.writers.journal_updates``)."""
 
-    def __init__(self, options, schema: StructType, overwrite: bool):
+    def __init__(self, options, schema: StructType, overwrite: bool,
+                 transform=None):
+        from mongo_hadoop_spark.store import DocumentCollection, _job_token
+
         self.options = options
         self.schema_ = schema
         self.overwrite = overwrite
-        self.coll_dir = os.path.join(options["path"], options["collection"])
-
-    def write(self, rows) -> _SegmentCommit:
-        from mongo_hadoop_spark import bsonio
-        from mongo_hadoop_spark.sinks.writers import row_to_doc
-
-        os.makedirs(self.coll_dir, exist_ok=True)
+        self.transform = transform
+        self.coll = DocumentCollection(
+            os.path.join(options["path"], options["collection"]))
         # optional codec (gzip/bz2): compressed segments are unsplittable
         # downstream (one task each) — the write-side of the codec rule
-        codec = str(self.options.get("compression", "")).lower()
-        ext = {"": "", "none": "", "gzip": ".gz", "bz2": ".bz2"}.get(codec)
-        if ext is None:
+        codec = str(options.get("compression", "")).lower()
+        self.ext = {"": "", "none": "", "gzip": ".gz", "bz2": ".bz2"}.get(codec)
+        if self.ext is None:
             raise ValueError(f"unsupported compression {codec!r}")
-        name = uuid.uuid4().hex[:12]
-        tmp = os.path.join(self.coll_dir, f"_tmp_{name}.bson{ext}.inprogress")
-        final = os.path.join(self.coll_dir, f"{name}.bson{ext}")
-        n = 0
-        opener = bsonio._CODEC_OPENERS.get(ext, open)
-        with opener(tmp, "wb") as f:
-            for row in rows:
-                f.write(bsonio.encode(row_to_doc(row)))
-                n += 1
-        return _SegmentCommit(tmp, final, n)
+        self.job = _job_token()  # temp-name token of this job
+
+    def write(self, batches) -> _SegmentCommit:
+        from mongo_hadoop_spark.sinks.writers import compile_docs
+
+        to_docs = compile_docs(self.schema_)
+        docs = (d for batch in batches for d in to_docs(batch))
+        if self.transform is not None:
+            docs = map(self.transform, docs)
+        return _SegmentCommit(self.coll.stage(docs, self.job, ext=self.ext))
 
     def commit(self, messages) -> None:
         from mongo_hadoop_spark import bsonio
         from mongo_hadoop_spark.plans.splitters import DEFAULT_SPLIT_SIZE
 
-        if self.overwrite:
-            import glob
-            for pat in ("*.bson", "*.bson.gz", "*.bson.bz2"):
-                for seg in glob.glob(os.path.join(self.coll_dir, pat)):
-                    os.remove(seg)
-                    sc = bsonio.sidecar_path(seg)
-                    if os.path.exists(sc):
-                        os.remove(sc)
-        write_sidecar = (
-            str(self.options.get("write_sidecar", "false")).lower() == "true"
-        )
-        split_size = int(self.options.get("split_size", DEFAULT_SPLIT_SIZE))
-        for m in messages:
-            if m is not None and os.path.exists(m.tmp_path):
-                os.rename(m.tmp_path, m.final_path)
-                if write_sidecar and not bsonio.compression_codec(m.final_path):
+        staged = [seg for m in messages if m is not None for seg in m.segments]
+        self.coll.publish(
+            staged, retire=self.coll.segments() if self.overwrite else ())
+        self.coll.discard(self.job)  # files of failed task attempts
+        if str(self.options.get("write_sidecar", "false")).lower() == "true":
+            split_size = int(self.options.get("split_size", DEFAULT_SPLIT_SIZE))
+            for seg in staged:
+                if not bsonio.compression_codec(seg.final_path):
                     # W4: persist the doc-boundary splits beside the segment
                     # (BSONFileRecordWriter's .splits sidecar) so later
                     # readers skip the length-header walk
-                    splits = bsonio.find_split_points(m.final_path, split_size)
-                    bsonio.write_splits_sidecar(m.final_path, splits)
+                    splits = bsonio.find_split_points(seg.final_path, split_size)
+                    bsonio.write_splits_sidecar(seg.final_path, splits)
 
     def abort(self, messages) -> None:
-        for m in messages or []:
-            if m is not None and os.path.exists(m.tmp_path):
-                os.remove(m.tmp_path)
+        self.coll.discard(self.job)
 
 
 @dataclass
@@ -723,7 +711,7 @@ class _LiveCommit(WriterCommitMessage):
     batches: int
 
 
-class LiveDocumentWriter(DataSourceWriter):
+class LiveDocumentWriter(DataSourceArrowWriter):
     """Insert writer against a live pymongo-protocol collection — the
     MongoRecordWriter shape (core/src/main/java/com/mongodb/hadoop/
     output/MongoRecordWriter.java:41-130): each task streams its rows as
@@ -735,7 +723,8 @@ class LiveDocumentWriter(DataSourceWriter):
     at-least-once, the documented MongoOutputFormat semantics (no
     job-level fence exists against a live server; the file-backed
     :class:`DocumentWriter` upgrades this to exactly-once via
-    temp-segment renames when the destination is a store directory).
+    staged segments published at job commit when the destination is a
+    store directory).
     """
 
     def __init__(self, options, schema: StructType):
@@ -743,26 +732,20 @@ class LiveDocumentWriter(DataSourceWriter):
         self.schema_ = schema
         self.batch_size = int(options.get("batch_size", 1000))
 
-    def write(self, rows) -> _LiveCommit:
-        from mongo_hadoop_spark.sinks.writers import row_to_doc
+    def write(self, batches) -> _LiveCommit:
+        from mongo_hadoop_spark.sinks.writers import compile_docs
         from mongo_hadoop_spark.sources.live_read import collection_from_uri
 
         coll = collection_from_uri(self.options["uri"],
                                    self.options.get("client_factory"))
-        batch: list = []
-        n = batches = 0
-        for row in rows:
-            batch.append(row_to_doc(row))
-            if len(batch) >= self.batch_size:
-                coll.insert_many(batch, ordered=True)
-                n += len(batch)
-                batches += 1
-                batch = []
-        if batch:
-            coll.insert_many(batch, ordered=True)
-            n += len(batch)
-            batches += 1
-        return _LiveCommit(n, batches)
+        to_docs = compile_docs(self.schema_)
+        docs = (d for batch in batches for d in to_docs(batch))
+        n = inserts = 0
+        for chunk in _chunks(docs, self.batch_size):
+            coll.insert_many(chunk, ordered=True)
+            n += len(chunk)
+            inserts += 1
+        return _LiveCommit(n, inserts)
 
     def commit(self, messages) -> None:
         pass  # batches already landed per task (reference semantics)

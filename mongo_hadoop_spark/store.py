@@ -2,12 +2,14 @@
 deployment (no server/driver exists in this environment).
 
 Layout: a *store* is a directory; a *collection* is a subdirectory of
-``*.bson`` segment files (mongorestore-compatible, SURVEY §2.10 W4).
-Writers emit one segment per Spark task through a temp-file + atomic
-rename commit protocol — the analog of MongoRecordWriter's temp-file
-spool + MongoOutputCommitter's commit-time replay
+``*.bson`` segment files (mongorestore-compatible, SURVEY §2.10 W4), each
+with a ``.meta.json`` sidecar (count, bytes, zone-map bounds).
+
+Every segment is written by one protocol, the analog of MongoRecordWriter's
+temp-file spool + MongoOutputCommitter's commit
 (core/.../output/MongoRecordWriter.java:41-130,
-core/.../output/MongoOutputCommitter.java:91-186).
+core/.../output/MongoOutputCommitter.java:91-186):
+:meth:`DocumentCollection.stage` then :meth:`DocumentCollection.publish`.
 
 A GridFS analog stores large binaries as chunk documents
 ({files_id, n, data}) beside a files-metadata collection
@@ -23,6 +25,7 @@ import glob
 import os
 import random
 import uuid
+from dataclasses import dataclass, field
 
 from mongo_hadoop_spark import bsonio
 from mongo_hadoop_spark.plans import filters as qf
@@ -32,19 +35,17 @@ DEFAULT_CHUNK_SIZE = 255 * 1024  # GridFS default chunk size
 META_SUFFIX = ".meta.json"
 
 
-def _write_segment_meta(seg_path: str, count: int,
-                        bounds: dict | None = None) -> None:
+def _write_segment_meta(seg: "StagedSegment") -> None:
+    """Write a staged segment's ``.meta.json`` under its final name."""
     import json
 
-    meta = {"count": count, "bytes": os.path.getsize(seg_path)}
-    if bounds:
-        clean = {k: b for k, b in bounds.items() if b is not None}
-        if clean:
-            meta["bounds"] = clean
-    tmp = seg_path + META_SUFFIX + ".inprogress"
-    with open(tmp, "w") as f:
+    meta = {"count": seg.count, "bytes": os.path.getsize(seg.tmp_path)}
+    clean = {k: b for k, b in seg.bounds.items() if b is not None}
+    if clean:
+        meta["bounds"] = clean
+    with open(seg.tmp_path + META_SUFFIX, "w") as f:
         json.dump(meta, f)
-    os.rename(tmp, seg_path + META_SUFFIX)
+    os.rename(seg.tmp_path + META_SUFFIX, seg.final_path + META_SUFFIX)
 
 
 # Zone-map bounds (parquet row-group stats analog): per segment, for each
@@ -88,12 +89,6 @@ def _track_bounds(bounds: dict, doc: dict) -> None:
 
 
 _MISSING = object()
-
-
-def _tracked(docs, bounds: dict):
-    for d in docs:
-        _track_bounds(bounds, d)
-        yield d
 
 
 def segment_may_match(bounds: dict | None, query: dict | None) -> bool:
@@ -145,6 +140,29 @@ def segment_may_match(bounds: dict | None, query: dict | None) -> bool:
             if op == "$lte" and lo > v:
                 return False
     return True
+
+
+def _remove_segment(seg_path: str) -> None:
+    """Remove a segment with its ``.meta.json`` and ``.splits`` sidecars."""
+    os.remove(seg_path)
+    for extra in (seg_path + META_SUFFIX, bsonio.sidecar_path(seg_path)):
+        if os.path.exists(extra):
+            os.remove(extra)
+
+
+def _job_token() -> str:
+    return uuid.uuid4().hex[:12]
+
+
+@dataclass
+class StagedSegment:
+    """A segment written under a temp name, with the count and zone-map
+    bounds its ``.meta.json`` gets when it is published."""
+    tmp_path: str
+    final_path: str
+    count: int = 0
+    size: int = 0
+    bounds: dict = field(default_factory=dict)
 
 
 def _read_segment_meta(seg_path: str) -> dict | None:
@@ -270,39 +288,73 @@ class DocumentCollection:
 
     # --- write side --------------------------------------------------------
 
-    def insert_many(self, docs, segment_hint: str | None = None) -> int:
-        """Bulk insert as one committed segment (temp file + rename).
-        A ``.meta.json`` stats sidecar (count/bytes) is committed alongside
-        so later collstats/count calls are metadata-only."""
+    def stage(self, docs, job: str, *, ext: str = "", name: str | None = None,
+              max_bytes: int | None = None) -> list[StagedSegment]:
+        """Write ``docs`` to temp segments (codec suffix ``ext``) that
+        readers do not see until :meth:`publish`; a new one starts when
+        the next document would take the current one past ``max_bytes``.
+        The first is published as ``name`` (default random).  Temp names
+        carry ``job``, for :meth:`discard`."""
         os.makedirs(self.path, exist_ok=True)
-        name = segment_hint or uuid.uuid4().hex[:12]
-        tmp = os.path.join(self.path, f"_tmp_{name}.bson.inprogress")
-        final = os.path.join(self.path, f"{name}.bson")
-        bounds: dict = {}
-        n = bsonio.write_bson_file(tmp, _tracked(docs, bounds))
-        _write_segment_meta(tmp, n, bounds)
-        os.rename(tmp + META_SUFFIX, final + META_SUFFIX)
-        os.rename(tmp, final)  # commit
-        return n
+        opener = bsonio._CODEC_OPENERS.get(ext, open)
+
+        def new(seg_name=None):
+            seg_name = seg_name or _job_token()
+            return StagedSegment(
+                os.path.join(self.path, f"_tmp_{job}_{seg_name}.bson{ext}.inprogress"),
+                os.path.join(self.path, f"{seg_name}.bson{ext}"))
+
+        staged = [new(name)]
+        f = opener(staged[0].tmp_path, "wb")
+        try:
+            for doc in docs:
+                data = bsonio.encode(doc)
+                seg = staged[-1]
+                if max_bytes and seg.size and seg.size + len(data) > max_bytes:
+                    f.close()
+                    staged.append(seg := new())
+                    f = opener(seg.tmp_path, "wb")
+                f.write(data)
+                seg.size += len(data)
+                seg.count += 1
+                _track_bounds(seg.bounds, doc)
+        finally:
+            f.close()
+        return staged
+
+    def publish(self, staged: list[StagedSegment], retire=()) -> None:
+        """The one commit of every store write: rename ``staged`` segments
+        in (each ``.meta.json`` first), then remove the ``retire``
+        segments.  A crash before the renames leaves only temp files; one
+        between publish and retire leaves old and new segments side by
+        side (documents duplicated, never lost), and a journal replayed
+        into them is applied again on re-run — both wait for an
+        idempotent, marker-based commit."""
+        for seg in staged:
+            _write_segment_meta(seg)
+            os.rename(seg.tmp_path, seg.final_path)
+        for seg in retire:
+            _remove_segment(seg)
+
+    def discard(self, job: str) -> None:
+        """Remove the temp files staged under ``job``."""
+        for p in glob.glob(os.path.join(self.path, f"_tmp_{job}_*")):
+            os.remove(p)
+
+    def insert_many(self, docs, segment_hint: str | None = None) -> int:
+        """Bulk insert as one published segment."""
+        staged = self.stage(docs, _job_token(), name=segment_hint)
+        self.publish(staged)
+        return staged[0].count
 
     def rewrite(self, docs) -> int:
-        """Replace collection contents atomically-ish (compaction/merge)."""
-        os.makedirs(self.path, exist_ok=True)
-        tmp = os.path.join(self.path, "_tmp_rewrite.bson.inprogress")
-        bounds: dict = {}
-        n = bsonio.write_bson_file(tmp, _tracked(docs, bounds))
-        _write_segment_meta(tmp, n, bounds)
-        for seg in self.segments():
-            os.remove(seg)
-            if os.path.exists(seg + META_SUFFIX):
-                os.remove(seg + META_SUFFIX)
-            sc = bsonio.sidecar_path(seg)
-            if os.path.exists(sc):
-                os.remove(sc)
-        final = os.path.join(self.path, "seg-000000.bson")
-        os.rename(tmp + META_SUFFIX, final + META_SUFFIX)
-        os.rename(tmp, final)
-        return n
+        """Replace the collection's contents with ``docs``, published under
+        a fresh name before the old segments are retired (crash window:
+        :meth:`publish`)."""
+        old = self.segments()
+        staged = self.stage(docs, _job_token())
+        self.publish(staged, retire=old)
+        return staged[0].count
 
     def compact(self, target_bytes: int = 8 * 1024 * 1024) -> dict:
         """Merge committed segments into ~``target_bytes`` packed segments.
@@ -315,71 +367,22 @@ class DocumentCollection:
         rebuilt per packed segment, so count/stats stay metadata-only
         and pruning keeps working.
 
-        Crash semantics match :meth:`rewrite`: new segments commit
-        (rename) before old ones are removed, so a crash in the cleanup
-        window leaves transiently duplicated documents; re-running
-        ``compact`` converges.  Single-writer assumption, like the rest
-        of the file store.
+        Crash window: :meth:`publish`; re-running ``compact`` converges.
+        Single-writer assumption, like the rest of the file store.
         """
-        from mongo_hadoop_spark import bsonio as _b
-
         old = self.segments()
         if len(old) <= 1:
             return {"before": len(old), "after": len(old), "rewritten": 0}
 
-        new_tmp: list[tuple[str, str]] = []  # (tmp_path, final_path)
-        fh = None
-        size = 0
-        n_docs = 0
-        bounds: dict = {}
+        def docs():
+            for seg in old:
+                with bsonio.open_bson(seg) as src:
+                    yield from bsonio.decode_file_iter(src)
 
-        def _open():
-            nonlocal fh, size, n_docs, bounds
-            name = uuid.uuid4().hex[:12]
-            tmp = os.path.join(self.path, f"_tmp_{name}.bson.inprogress")
-            final = os.path.join(self.path, f"{name}.bson")
-            new_tmp.append((tmp, final))
-            fh = open(tmp, "wb")
-            size = 0
-            n_docs = 0
-            bounds = {}
-
-        def _close():
-            nonlocal fh
-            if fh is None:
-                return
-            fh.close()
-            tmp = new_tmp[-1][0]
-            _write_segment_meta(tmp, n_docs, bounds)
-            fh = None
-
-        _open()
-        rewritten = 0
-        for seg in old:
-            with _b.open_bson(seg) as src:
-                for doc in _b.decode_file_iter(src):
-                    data = _b.encode(doc)
-                    if size and size + len(data) > target_bytes:
-                        _close()
-                        _open()
-                    fh.write(data)
-                    size += len(data)
-                    n_docs += 1
-                    _track_bounds(bounds, doc)
-                    rewritten += 1
-        _close()
-
-        # commit all new segments, then remove the old ones
-        for tmp, final in new_tmp:
-            os.rename(tmp + META_SUFFIX, final + META_SUFFIX)
-            os.rename(tmp, final)
-        for seg in old:
-            os.remove(seg)
-            for extra in (seg + META_SUFFIX, bsonio.sidecar_path(seg)):
-                if os.path.exists(extra):
-                    os.remove(extra)
-        return {"before": len(old), "after": len(new_tmp),
-                "rewritten": rewritten}
+        staged = self.stage(docs(), _job_token(), max_bytes=target_bytes)
+        self.publish(staged, retire=old)
+        return {"before": len(old), "after": len(staged),
+                "rewritten": sum(s.count for s in staged)}
 
     def create_index(self, keys, **options) -> str:
         """ensureIndex analog (pig/.../MongoStorage.java:237-238, W7/W10):
@@ -432,23 +435,14 @@ class DocumentStore:
         )
 
     def drop(self, name: str) -> None:
+        """Remove the collection's directory: its segments and every file
+        beside them (sidecars, ``.indexes``, a late task attempt's temp
+        files, sidecars orphaned by earlier versions)."""
         coll = self.collection(name)
-        for seg in coll.segments():
-            os.remove(seg)
-            if os.path.exists(seg + META_SUFFIX):
-                os.remove(seg + META_SUFFIX)
-            sc = bsonio.sidecar_path(seg)
-            if os.path.exists(sc):
-                os.remove(sc)
-        for extra in (".indexes",):
-            p = os.path.join(coll.path, extra)
-            if os.path.exists(p):
-                os.remove(p)
         if os.path.isdir(coll.path):
-            # leftover split sidecars of segments removed earlier (e.g. by
-            # rewrite) would make rmdir fail with 'Directory not empty'
-            for stray in glob.glob(os.path.join(coll.path, ".*.splits")):
-                os.remove(stray)
+            for entry in os.scandir(coll.path):
+                if entry.is_file():
+                    os.remove(entry.path)
             os.rmdir(coll.path)
 
     # --- GridFS analog -----------------------------------------------------

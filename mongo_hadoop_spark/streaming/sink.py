@@ -7,11 +7,12 @@ is a template filled from event attributes/timestamps (e.g.
 ``events_%{type}_%Y%m%d``), with an LRU of open writers.
 
 Spark-native shape: ``writeStream.foreachBatch(sink)`` — each micro-batch
-is grouped by the rendered bucket name and appended as one committed
-segment per bucket.  The bucket template accepts ``{column}`` plus
-``%Y %m %d %H`` time fields from an event-time column.  foreachBatch gives
-exactly-once-per-batch segment commits (batch id in the segment name, so
-retried batches overwrite rather than duplicate).
+is grouped by the rendered bucket name, and each task publishes one
+segment per bucket it holds.  The bucket template accepts ``{column}`` plus
+``%Y %m %d %H`` time fields from an event-time column.  There is no job
+commit (unlike ``sinks.writers``): the segment name carries the batch id
+and partition, so a retried task or batch overwrites rather than
+duplicates.
 """
 
 from __future__ import annotations
@@ -46,7 +47,7 @@ class BucketedDocumentSink:
         return out
 
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
-        from mongo_hadoop_spark.sinks.writers import row_to_doc
+        from mongo_hadoop_spark.sinks.writers import compile_docs
         from mongo_hadoop_spark.store import DocumentStore
 
         store_path = self.store_path
@@ -64,33 +65,25 @@ class BucketedDocumentSink:
                     "per value — fix the template or raise max_buckets"
                 )
 
-        def write_partition(rows):
+        to_docs = compile_docs(with_bucket.schema)
+
+        def write_partition(batches):
             from pyspark import TaskContext
 
             pid = TaskContext.get().partitionId() if TaskContext.get() else 0
             by_bucket: dict[str, list] = {}
-            for row in rows:
-                d = row.asDict()
-                bucket = d.pop("__bucket")
-                by_bucket.setdefault(bucket, []).append(d)
+            for batch in batches:
+                for d in to_docs(batch):
+                    by_bucket.setdefault(d.pop("__bucket"), []).append(d)
             store = DocumentStore(store_path)
             for bucket, docs in by_bucket.items():
                 # deterministic name per (batch, partition): a retried batch
                 # re-renames over the same segment instead of duplicating
                 store.collection(bucket).insert_many(
-                    ({k: _clean(v) for k, v in d.items()} for d in docs),
-                    segment_hint=f"b{batch_id:06d}p{pid:04d}",
-                )
+                    docs, segment_hint=f"b{batch_id:06d}p{pid:04d}")
+            return iter(())
 
         # hash-repartition by bucket so each task writes few segments; no
         # driver-side bucket list — cardinality never touches the driver
         (with_bucket.repartition(max(1, self.num_partitions), "__bucket")
-         .foreachPartition(write_partition))
-
-
-def _clean(v):
-    import datetime as _dt
-
-    if isinstance(v, _dt.date) and not isinstance(v, _dt.datetime):
-        return _dt.datetime(v.year, v.month, v.day, tzinfo=_dt.timezone.utc)
-    return v
+         .mapInArrow(write_partition, "n long").count())

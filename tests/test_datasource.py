@@ -375,7 +375,7 @@ def test_live_full_loop_read_transform_commit(registered, store, tmp_path):
     from fake_mongo import FakeCollection
     from mongo_hadoop_spark.sinks.live import commit_updates_live
     from mongo_hadoop_spark.sinks.writers import (_default_builder,
-                                                  _UpdateJournalTask)
+                                                  journal_updates)
     from mongo_hadoop_spark.store import DocumentStore
 
     # read from the live backend, aggregate per status
@@ -387,9 +387,8 @@ def test_live_full_loop_read_transform_commit(registered, store, tmp_path):
     # journal the aggregate as upserts (the task half), then replay into
     # a destination fake server (the commit half)
     spool = DocumentStore(str(tmp_path / "spool"))
-    agg.foreachPartition(
-        _UpdateJournalTask(spool.path, "status_rollup",
-                           _default_builder("upsert", ["status"])))
+    journal_updates(agg, spool.path, "status_rollup",
+                    _default_builder("upsert", ["status"]))
     dest = FakeCollection("status_rollup")
     stats = commit_updates_live(spool.path, "status_rollup", dest)
     assert stats["upserted"] == 2

@@ -237,6 +237,26 @@ def test_schemaless_whole_document_as_extended_json(orders):
     assert table.num_rows == len(ORDERS)
 
 
+def test_bson_timestamp_renders_as_extended_json(tmp_path):
+    """A BSON timestamp inside a string column or a schemaless document
+    renders as canonical ``{"$timestamp": {"t", "i"}}``."""
+    docs = [{"b": [BsonTimestamp(0, 0)]}, {"b": {"x": BsonTimestamp(7, 3)}}]
+    root = _write_store(str(tmp_path), docs, n_segments=1)
+    options = {"path": root, "collection": "c"}
+    reader = mds.DocumentReader(
+        options, StructType([StructField("b", StringType())]), arrow=True)
+    table = _check_reader(reader, reader.partitions(), options)
+    assert table.column("b").to_pylist() == [
+        '[{"$timestamp": {"t": 0, "i": 0}}]',
+        '{"x": {"$timestamp": {"t": 7, "i": 3}}}']
+    options["schemaless"] = "true"
+    reader = mds.DocumentDataSource(options).reader(
+        mds.DocumentDataSource(options).schema())
+    table = _check_reader(reader, reader.partitions(), options)
+    assert [extjson.parse_query(v)["b"] for v in table.column(0).to_pylist()
+            ] == [d["b"] for d in docs]
+
+
 def test_empty_partitions_yield_no_batch(orders):
     reader = mds.DocumentReader(
         {"path": orders, "collection": "orders", "query": '{"_id": -1}'},

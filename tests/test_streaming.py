@@ -497,7 +497,7 @@ def test_stream_foreachbatch_upserts_into_live_collection(spark, events_dir,
 
     from fake_mongo import FakeCollection
     from mongo_hadoop_spark.sinks.live import commit_updates_live
-    from mongo_hadoop_spark.sinks.writers import (_UpdateJournalTask,
+    from mongo_hadoop_spark.sinks.writers import (journal_updates,
                                                   template_update_builder)
     from mongo_hadoop_spark.store import DocumentStore
     from mongo_hadoop_spark.streaming.jobs import streaming_events_source
@@ -510,8 +510,7 @@ def test_stream_foreachbatch_upserts_into_live_collection(spark, events_dir,
     def sink(batch_df, batch_id):
         agg = batch_df.groupBy("event_type").agg(
             F.count(F.lit(1)).alias("cnt"))
-        agg.foreachPartition(
-            _UpdateJournalTask(store.path, "type_counts", builder))
+        journal_updates(agg, store.path, "type_counts", builder)
         commit_updates_live(store.path, "type_counts", live)
 
     src = (spark.readStream.schema(

@@ -102,6 +102,17 @@ def test_extjson_datetime_exact_millis():
     assert to_extjson_value(v)["$date"] % 1000 == 432
 
 
+def test_extjson_bson_timestamp_round_trip():
+    from mongo_hadoop_spark.bsonio import BsonTimestamp
+    from mongo_hadoop_spark.sources.extjson import dumps, parse_query
+
+    doc = {"ts": BsonTimestamp(1_700_000_000, 5),
+           "nested": {"a": [BsonTimestamp(0, 0)]}}
+    text = dumps(doc)
+    assert '"$timestamp": {"t": 1700000000, "i": 5}' in text
+    assert parse_query(text) == doc
+
+
 def test_bit_operator():
     from mongo_hadoop_spark.plans.updates import apply_update
 

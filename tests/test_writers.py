@@ -128,12 +128,11 @@ from fake_mongo import FakeBulkWriteError, FakeCollection
 def _journal_updates(spark, store, mode, rows, schema, key_cols):
     """Journal mutations WITHOUT applying them (the task half only)."""
     from mongo_hadoop_spark.sinks.writers import (_default_builder,
-                                                  _UpdateJournalTask)
+                                                  journal_updates)
 
     df = spark.createDataFrame(rows, schema)
-    df.foreachPartition(
-        _UpdateJournalTask(store.path, "devices",
-                           _default_builder(mode, key_cols)))
+    journal_updates(df, store.path, "devices",
+                    _default_builder(mode, key_cols))
 
 
 def test_live_update_matches_file_store_commit(spark, target, tmp_path):
@@ -275,17 +274,28 @@ def test_target_from_uri_resolves_namespace(spark, tmp_path):
 _SINK: dict = {}
 
 
+def _arrow_batches(rows, schema, rows_per_batch=2):
+    """``rows`` as the Arrow batches a Spark write hands a DataSource
+    writer (pyspark's own local-data conversion)."""
+    from pyspark.sql.conversion import LocalDataToArrowConversion
+
+    table = LocalDataToArrowConversion.convert(rows, schema, False)
+    return table.to_batches(max_chunksize=rows_per_batch)
+
+
 def _sink_client(uri):
     """client_factory for the live mongodoc writer: one fake collection."""
     return {"outdb": {"c": _SINK["coll"]}}
 
 
 def test_mongodoc_writers_build_documents_with_row_to_doc(tmp_path):
-    """Both mongodoc DataSource writers turn each row into a document with
-    ``writers.row_to_doc``: nested rows, arrays of rows, maps and dates."""
+    """Both mongodoc DataSource writers turn each row into the document
+    ``writers.row_to_doc`` builds: nested rows, arrays of rows, maps and
+    dates."""
     import datetime as dt
 
     from pyspark.sql import Row
+    from pyspark.sql.types import StructType
 
     from mongo_hadoop_spark import bsonio
     from mongo_hadoop_spark.sinks.writers import row_to_doc
@@ -305,16 +315,20 @@ def test_mongodoc_writers_build_documents_with_row_to_doc(tmp_path):
             for i in range(3)]
     assert [row_to_doc(r) for r in rows] == want
 
+    schema = StructType.fromDDL(
+        "_id long, day date, cust struct<name string, tags array<string>>, "
+        "lines array<struct<sku string, qty long>>, attrs map<string, long>")
+    batches = _arrow_batches(rows, schema)
     writer = DocumentWriter({"path": str(tmp_path), "collection": "c"},
-                            None, overwrite=False)
-    msg = writer.write(iter(rows))
+                            schema, overwrite=False)
+    msg = writer.write(iter(batches))
     writer.commit([msg])
-    with open(msg.final_path, "rb") as f:
+    with open(msg.segments[0].final_path, "rb") as f:
         assert list(bsonio.decode_file_iter(f)) == want
 
     _SINK["coll"] = FakeCollection("c")
     live = LiveDocumentWriter({"uri": "mongodb://localhost/outdb.c",
                                "client_factory": "test_writers:_sink_client",
-                               "batch_size": "2"}, None)
-    assert live.write(iter(rows)).batches == 2
+                               "batch_size": "2"}, schema)
+    assert live.write(iter(batches)).batches == 2
     assert _SINK["coll"].docs == want
